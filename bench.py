@@ -207,14 +207,11 @@ def run_suite(spark, sf_dir: str, report_rows: bool = True,
     When ``cpu_probes``/``mem_probes`` are lists, probe readings are
     appended after queries (between timed regions): one CPU spin per
     query, one memory probe per three queries."""
-    from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
+    from slow_tortoise_spark.queries import REGISTRY
 
     timings: dict[str, float] = {}
-    # The bench set is held stable round-over-round; catalog↔verifier
-    # rotations (round 3) don't change what gets measured.
-    catalog = {**VERIFIER_QUERIES, **QUERIES}
     for name in BENCH_QUERIES:
-        fn = catalog[name]
+        fn = REGISTRY[name][0]
         best = None
         # min-of-3: the first iteration absorbs cold page-cache + codegen
         # for this query's tables (measured: first isolated suite run 15.0s

@@ -82,3 +82,15 @@ def _dsum(col):
     return F.sum(col.cast("decimal(25,6)")).cast("double")
 
 
+# Every query, keyed by name: its Spark callable and its DuckDB oracle.
+# Each family module registers its queries where they are defined;
+# catalog.py (imported last) splits the registry into the two tiers.
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {}
+
+
+def register(name: str, fn: Callable[[SparkSession, str], DataFrame],
+             sql: str) -> None:
+    """Add one query together with its oracle SQL; a name registers once."""
+    if name in REGISTRY:
+        raise ValueError(f"query {name!r} is already registered")
+    REGISTRY[name] = (fn, sql)

@@ -1,138 +1,42 @@
-"""The driver catalog dicts (QUERIES / ORACLE_SQL): base membership as
-registered by the core families; later modules update them and
-_rotations.py replays the round-by-round catalog rotations.  Formerly
-queries.py lines 1340-1403."""
+"""The tier table.  Every query registers itself, with its oracle, in
+``_shared.REGISTRY`` where it is defined; this module, imported last,
+splits the registry into two tiers.
+
+Tiers come from ``DRIVER_CATALOG``; rotate by editing it.  The driver
+hash-checks exactly these 50 queries (``QUERIES`` / ``ORACLE_SQL``);
+every other registered query is the local verifier tier
+(``VERIFIER_QUERIES`` / ``VERIFIER_ORACLE_SQL``), oracle-checked by
+tests/oracle_harness.py.  A rotation swaps names in and out of the
+table; each name moved out must keep a sibling of its operator family
+in it, and no verifier query may go more than five recorded rounds
+without a driver row (tests/test_catalog_contract.py).
+"""
 from __future__ import annotations
 
-from slow_tortoise_spark.queries._shared import (
-    Callable,
-    DataFrame,
-    SparkSession,
-)
-from slow_tortoise_spark.queries.star import (
-    _Q_ANTI_JOIN,
-    _Q_HARMONIZED_UNION,
-    _Q_PRICING_SUMMARY,
-    _Q_REGION_REVENUE,
-    _Q_TOP_ORDERS,
-    _Q_WINDOW_TOPN,
-    q_anti_join,
-    q_harmonized_union,
-    q_pricing_summary,
-    q_region_revenue,
-    q_top_orders,
-    q_window_topn,
-)
-from slow_tortoise_spark.queries.datacube import (
-    _Q_GLOBAL_TIMESERIES,
-    _Q_OUTPUT_SUMMARY,
-    _Q_QUALIFIER_COUNTS,
-    _Q_QUALIFIER_PIVOT,
-    _Q_REGIONAL_EXTREMA,
-    _Q_REGIONAL_ROLLUP,
-    _Q_REGIONAL_TIMESERIES,
-    _Q_REGION_ID,
-    _Q_TEMPORAL_AGG_MONTH,
-    _Q_VALIDATE_COERCION,
-    _Q_WEIGHTED_AGG,
-    q_global_timeseries,
-    q_output_summary,
-    q_qualifier_counts,
-    q_qualifier_pivot,
-    q_region_id,
-    q_regional_extrema,
-    q_regional_rollup,
-    q_regional_timeseries,
-    q_temporal_agg_month,
-    q_validate_coercion,
-    q_weighted_agg,
-)
-from slow_tortoise_spark.queries.tiles import (
-    _Q_GRID_STATS,
-    _Q_TILE_BINNING,
-    _Q_TILE_ROLLUP,
-    q_grid_stats,
-    q_tile_binning,
-    q_tile_rollup,
-)
-from slow_tortoise_spark.queries.training import (
-    _Q_ANN_COSINE_TOPK,
-    _Q_IVF_TOPK,
-    _Q_JACCARD_PAIRS,
-    _Q_MINHASH_LSH_PAIRS,
-    _Q_TOKEN_STATS,
-    _embedding_near_dups_sql,
-    _lang_id_sql,
-    q_ann_cosine_topk,
-    q_embedding_near_dups,
-    q_ivf_topk,
-    q_jaccard_pairs,
-    q_lang_id,
-    q_minhash_lsh_pairs,
-    q_token_stats,
+from slow_tortoise_spark.queries._shared import REGISTRY
+
+DRIVER_CATALOG = (
+    "anti_join", "approx_distinct", "bm25_rank", "bpe_pairs", "bpe_train",
+    "containment_pairs", "contamination", "cube_agg", "dedup_drop",
+    "event_sequences", "incremental_dedup", "ivfpq_topk",
+    "jsonl_roundtrip", "k_core", "lsh_edit_funnel", "mad_outliers",
+    "minhash_signatures", "pack_sequences_append",
+    "pack_sequences_nosplit", "pagerank_graph", "pii_redact", "pq_codes",
+    "pq_topk", "profile_table", "qualifier_counts", "range_join",
+    "region_id", "region_lists", "region_revenue", "rolling_window",
+    "rows_per_feature", "salted_join", "semdedup_auto", "sessionize_batch",
+    "simhash", "simhash16", "snapshot_time_travel", "source_cap",
+    "temperature_mix", "temporal_agg_all", "temporal_agg_month",
+    "temporal_agg_year", "tile_binning", "token_budget_select",
+    "token_stats", "unigram_logprob", "validate_coercion",
+    "weighted_timeseries", "window_rank_surface", "window_running",
 )
 
-# Catalog
-# ---------------------------------------------------------------------------
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pricing_summary": q_pricing_summary,
-    "top_orders": q_top_orders,
-    "region_revenue": q_region_revenue,
-    "anti_join": q_anti_join,
-    "window_topn": q_window_topn,
-    "harmonized_union": q_harmonized_union,
-    "temporal_agg_month": q_temporal_agg_month,
-    "global_timeseries": q_global_timeseries,
-    "weighted_agg": q_weighted_agg,
-    "output_summary": q_output_summary,
-    "region_id": q_region_id,
-    "regional_rollup": q_regional_rollup,
-    "regional_timeseries": q_regional_timeseries,
-    "regional_extrema": q_regional_extrema,
-    "qualifier_pivot": q_qualifier_pivot,
-    "qualifier_counts": q_qualifier_counts,
-    "validate_coercion": q_validate_coercion,
-    "tile_binning": q_tile_binning,
-    "tile_rollup": q_tile_rollup,
-    "grid_stats": q_grid_stats,
-    "token_stats": q_token_stats,
-    "lang_id": q_lang_id,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "jaccard_pairs": q_jaccard_pairs,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "embedding_near_dups": q_embedding_near_dups,
-    "ivf_topk": q_ivf_topk,
+QUERIES = {n: REGISTRY[n][0] for n in DRIVER_CATALOG}
+ORACLE_SQL = {n: REGISTRY[n][1] for n in DRIVER_CATALOG}
+VERIFIER_QUERIES = {
+    n: fn for n, (fn, _) in REGISTRY.items() if n not in QUERIES
 }
-
-ORACLE_SQL: dict[str, str] = {
-    "pricing_summary": _Q_PRICING_SUMMARY,
-    "top_orders": _Q_TOP_ORDERS,
-    "region_revenue": _Q_REGION_REVENUE,
-    "anti_join": _Q_ANTI_JOIN,
-    "window_topn": _Q_WINDOW_TOPN,
-    "harmonized_union": _Q_HARMONIZED_UNION,
-    "temporal_agg_month": _Q_TEMPORAL_AGG_MONTH,
-    "global_timeseries": _Q_GLOBAL_TIMESERIES,
-    "weighted_agg": _Q_WEIGHTED_AGG,
-    "output_summary": _Q_OUTPUT_SUMMARY,
-    "region_id": _Q_REGION_ID,
-    "regional_rollup": _Q_REGIONAL_ROLLUP,
-    "regional_timeseries": _Q_REGIONAL_TIMESERIES,
-    "regional_extrema": _Q_REGIONAL_EXTREMA,
-    "qualifier_pivot": _Q_QUALIFIER_PIVOT,
-    "qualifier_counts": _Q_QUALIFIER_COUNTS,
-    "validate_coercion": _Q_VALIDATE_COERCION,
-    "tile_binning": _Q_TILE_BINNING,
-    "tile_rollup": _Q_TILE_ROLLUP,
-    "grid_stats": _Q_GRID_STATS,
-    "token_stats": _Q_TOKEN_STATS,
-    "lang_id": _lang_id_sql(),
-    "minhash_lsh_pairs": _Q_MINHASH_LSH_PAIRS,
-    "jaccard_pairs": _Q_JACCARD_PAIRS,
-    "ann_cosine_topk": _Q_ANN_COSINE_TOPK,
-    "embedding_near_dups": _embedding_near_dups_sql(),
-    "ivf_topk": _Q_IVF_TOPK,
+VERIFIER_ORACLE_SQL = {
+    n: sql for n, (_, sql) in REGISTRY.items() if n not in QUERIES
 }
-
-

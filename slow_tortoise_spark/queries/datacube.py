@@ -15,6 +15,7 @@ from slow_tortoise_spark.queries._shared import (
     regional_extrema,
     temporal_aggregation,
     to_normalized_time,
+    register,
 )
 
 # ---------------------------------------------------------------------------
@@ -457,3 +458,20 @@ _Q_VALIDATE_COERCION = """
 
 
 # ---------------------------------------------------------------------------
+
+
+register("temporal_agg_month", q_temporal_agg_month, _Q_TEMPORAL_AGG_MONTH)
+register("temporal_agg_year", q_temporal_agg_year, _Q_TEMPORAL_AGG_YEAR)
+register("temporal_agg_all", q_temporal_agg_all, _Q_TEMPORAL_AGG_ALL)
+register("global_timeseries", q_global_timeseries, _Q_GLOBAL_TIMESERIES)
+register("weighted_agg", q_weighted_agg, _Q_WEIGHTED_AGG)
+register("output_summary", q_output_summary, _Q_OUTPUT_SUMMARY)
+register("region_id", q_region_id, _Q_REGION_ID)
+register("regional_rollup", q_regional_rollup, _Q_REGIONAL_ROLLUP)
+register("regional_timeseries", q_regional_timeseries, _Q_REGIONAL_TIMESERIES)
+register("regional_extrema", q_regional_extrema, _Q_REGIONAL_EXTREMA)
+register("qualifier_pivot", q_qualifier_pivot, _Q_QUALIFIER_PIVOT)
+register("qualifier_counts", q_qualifier_counts, _Q_QUALIFIER_COUNTS)
+register("region_lists", q_region_lists, _Q_REGION_LISTS)
+register("rows_per_feature", q_rows_per_feature, _Q_ROWS_PER_FEATURE)
+register("validate_coercion", q_validate_coercion, _Q_VALIDATE_COERCION)

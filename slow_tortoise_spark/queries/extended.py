@@ -9,8 +9,8 @@ from slow_tortoise_spark.queries._shared import (
     _dsum,
     _t,
     read_table,
+    register,
 )
-from slow_tortoise_spark.queries.catalog import ORACLE_SQL, QUERIES
 from slow_tortoise_spark.queries.training import (
     _hyperplanes,
 )
@@ -275,23 +275,14 @@ _Q_MEDIA_FEATURES = """
 """
 
 
-QUERIES.update(
-    {
-        "cube_agg": q_cube_agg,
-        "streaming_window_counts": q_streaming_window_counts,
-        "dedup_exact_docs": q_dedup_exact_docs,
-        "media_features": q_media_features,
-    }
+register("cube_agg", q_cube_agg, _Q_CUBE_AGG)
+register(
+    "streaming_window_counts",
+    q_streaming_window_counts,
+    _Q_STREAMING_WINDOW_COUNTS,
 )
-
-ORACLE_SQL.update(
-    {
-        "cube_agg": _Q_CUBE_AGG,
-        "streaming_window_counts": _Q_STREAMING_WINDOW_COUNTS,
-        "dedup_exact_docs": _Q_DEDUP_EXACT_DOCS,
-        "media_features": _Q_MEDIA_FEATURES,
-    }
-)
+register("dedup_exact_docs", q_dedup_exact_docs, _Q_DEDUP_EXACT_DOCS)
+register("media_features", q_media_features, _Q_MEDIA_FEATURES)
 
 
 def q_salted_agg(spark, sf_dir):
@@ -333,8 +324,7 @@ _Q_SALTED_AGG = f"""
   FROM events GROUP BY event_type ORDER BY event_type
 """
 
-QUERIES["salted_agg"] = q_salted_agg
-ORACLE_SQL["salted_agg"] = _Q_SALTED_AGG
+register("salted_agg", q_salted_agg, _Q_SALTED_AGG)
 
 
 def q_weighted_timeseries(spark, sf_dir):
@@ -466,8 +456,7 @@ _Q_WEIGHTED_TIMESERIES = """
   FROM t2 GROUP BY 1, 2 ORDER BY 1, 2
 """
 
-QUERIES["weighted_timeseries"] = q_weighted_timeseries
-ORACLE_SQL["weighted_timeseries"] = _Q_WEIGHTED_TIMESERIES
+register("weighted_timeseries", q_weighted_timeseries, _Q_WEIGHTED_TIMESERIES)
 
 
 def q_asof_join(spark, sf_dir):
@@ -611,22 +600,10 @@ _Q_PERCENTILES = """
   FROM lineitem GROUP BY 1 ORDER BY 1
 """
 
-QUERIES.update(
-    {
-        "asof_join": q_asof_join,
-        "range_join": q_range_join,
-        "rolling_window": q_rolling_window,
-        "percentiles": q_percentiles,
-    }
-)
-ORACLE_SQL.update(
-    {
-        "asof_join": _Q_ASOF_JOIN,
-        "range_join": _Q_RANGE_JOIN,
-        "rolling_window": _Q_ROLLING_WINDOW,
-        "percentiles": _Q_PERCENTILES,
-    }
-)
+register("asof_join", q_asof_join, _Q_ASOF_JOIN)
+register("range_join", q_range_join, _Q_RANGE_JOIN)
+register("rolling_window", q_rolling_window, _Q_ROLLING_WINDOW)
+register("percentiles", q_percentiles, _Q_PERCENTILES)
 
 
 def q_approx_distinct(spark, sf_dir):
@@ -665,8 +642,7 @@ _Q_APPROX_DISTINCT = """
   FROM events GROUP BY event_type ORDER BY event_type
 """
 
-QUERIES["approx_distinct"] = q_approx_distinct
-ORACLE_SQL["approx_distinct"] = _Q_APPROX_DISTINCT
+register("approx_distinct", q_approx_distinct, _Q_APPROX_DISTINCT)
 
 
 def q_json_extract(spark, sf_dir):
@@ -742,16 +718,7 @@ _Q_STRING_FUNCS = """
   FROM part ORDER BY p_partkey
 """
 
-QUERIES.update(
-    {
-        "json_extract": q_json_extract,
-    }
-)
-ORACLE_SQL.update(
-    {
-        "json_extract": _Q_JSON_EXTRACT,
-    }
-)
+register("json_extract", q_json_extract, _Q_JSON_EXTRACT)
 
 
 def q_dedup_drop(spark, sf_dir):
@@ -785,4 +752,7 @@ _Q_DEDUP_DROP = """
 """
 
 
-
+register("hyperplane_lsh_buckets", q_hyperplane_lsh_buckets, _hyperplane_sql())
+register("date_parts", q_date_parts, _Q_DATE_PARTS)
+register("string_funcs", q_string_funcs, _Q_STRING_FUNCS)
+register("dedup_drop", q_dedup_drop, _Q_DEDUP_DROP)

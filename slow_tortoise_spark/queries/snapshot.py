@@ -1,27 +1,22 @@
-"""Snapshot time travel, driver-checked (round 6).  Formerly
-queries.py lines 5356-5431."""
+"""Snapshot time travel, incremental aggregates and bucketed merges.
+Formerly queries.py lines 5356-5431."""
 from __future__ import annotations
 
 from slow_tortoise_spark.queries._shared import (
     F,
     _t,
-)
-from slow_tortoise_spark.queries.catalog import ORACLE_SQL, QUERIES
-from slow_tortoise_spark.queries.verifier_core import (
-    VERIFIER_ORACLE_SQL,
-    VERIFIER_QUERIES,
+    register,
 )
 
-# Snapshot time travel, driver-checked (round-5 verdict item 7: the
-# merge-on-write layer was only ever tested against itself; this gives the
-# commit protocol an INDEPENDENT-engine witness).  Two batch commits run
-# through the exact foreachBatch merge streaming_upsert uses
-# (streaming/pipeline.py _upsert_merge_fn — the streaming wrapper adds only
-# the trigger); the query then time-travel-reads version 0 AFTER commit 1
-# has rewritten the snapshot and flipped the manifest.  The oracle replays
-# commit 0's change set in SQL — so a hash match proves the older version
-# is byte-equivalent to an independent replay, i.e. commit 1 touched
-# nothing it shouldn't have.
+# Snapshot time travel (the merge-on-write layer was only ever tested
+# against itself; this gives the commit protocol an INDEPENDENT-engine
+# witness).  Two batch commits run through the exact foreachBatch merge
+# streaming_upsert uses (streaming/pipeline.py _upsert_merge_fn — the
+# streaming wrapper adds only the trigger); the query then time-travel-reads
+# version 0 AFTER commit 1 has rewritten the snapshot and flipped the
+# manifest.  The oracle replays commit 0's change set in SQL — so a hash
+# match proves the older version is byte-equivalent to an independent
+# replay, i.e. commit 1 touched nothing it shouldn't have.
 # ---------------------------------------------------------------------------
 
 
@@ -84,20 +79,18 @@ _Q_SNAPSHOT_TIME_TRAVEL = """
 """
 
 
-QUERIES["snapshot_time_travel"] = q_snapshot_time_travel
-ORACLE_SQL["snapshot_time_travel"] = _Q_SNAPSHOT_TIME_TRAVEL
+register(
+    "snapshot_time_travel", q_snapshot_time_travel, _Q_SNAPSHOT_TIME_TRAVEL,
+)
 
 
-
-
-# Incremental aggregate snapshot, driver-checked (round-7 verdict item
-# 6: the algebraic-state maintenance layer — streaming_agg_snapshot —
-# was only ever tested against itself).  Three micro-batch commits,
-# each a disjoint third of `orders`, run through the exact foreachBatch
-# merge the stream uses (_agg_merge_fn; the streaming wrapper adds only
-# the trigger), with one batch REPLAYED mid-sequence to exercise the
-# no-double-count contract.  The oracle is DuckDB's one-shot aggregate
-# over all of `orders` — a hash match proves three incremental
+# Incremental aggregate snapshot (the algebraic-state maintenance layer —
+# streaming_agg_snapshot — was only ever tested against itself).  Three
+# micro-batch commits, each a disjoint third of `orders`, run through the
+# exact foreachBatch merge the stream uses (_agg_merge_fn; the streaming
+# wrapper adds only the trigger), with one batch REPLAYED mid-sequence to
+# exercise the no-double-count contract.  The oracle is DuckDB's one-shot
+# aggregate over all of `orders` — a hash match proves three incremental
 # (previous snapshot + batch partial) merges plus a replay are
 # byte-equivalent to aggregating the whole table at once.  Sums run in
 # integer cents: float addition is order-sensitive, bigint addition is
@@ -160,16 +153,16 @@ _Q_AGG_SNAPSHOT_INCREMENTAL = """
 """
 
 
-QUERIES["agg_snapshot_incremental"] = q_agg_snapshot_incremental
-ORACLE_SQL["agg_snapshot_incremental"] = _Q_AGG_SNAPSHOT_INCREMENTAL
+register(
+    "agg_snapshot_incremental",
+    q_agg_snapshot_incremental,
+    _Q_AGG_SNAPSHOT_INCREMENTAL,
+)
 
 
-
-
-# Bucketed merge-on-write, oracle-checked (round-8; closes the last
-# snapshot layer that was only ever tested against itself).  Three
-# commits run through the exact foreachBatch merge
-# streaming_upsert_bucketed uses (_bucketed_merge_fn — the streaming
+# Bucketed merge-on-write (closes the last snapshot layer that was only ever
+# tested against itself).  Three commits run through the exact foreachBatch
+# merge streaming_upsert_bucketed uses (_bucketed_merge_fn — the streaming
 # wrapper adds only the trigger), with batch 1 REPLAYED after commit to
 # exercise the manifest's no-double-apply contract.  Batch 2 is a
 # deliberately NARROW change set (keys ≡ 1 mod 100) over 64 buckets, so
@@ -252,5 +245,6 @@ _Q_BUCKETED_MERGE_UPSERT = """
 """
 
 
-VERIFIER_QUERIES["bucketed_merge_upsert"] = q_bucketed_merge_upsert
-VERIFIER_ORACLE_SQL["bucketed_merge_upsert"] = _Q_BUCKETED_MERGE_UPSERT
+register(
+    "bucketed_merge_upsert", q_bucketed_merge_upsert, _Q_BUCKETED_MERGE_UPSERT,
+)

@@ -7,6 +7,7 @@ from slow_tortoise_spark.queries._shared import (
     _DSUM,
     _dsum,
     _t,
+    register,
 )
 
 # ---------------------------------------------------------------------------
@@ -288,3 +289,12 @@ _Q_HARMONIZED_UNION = """
 """
 
 
+register("pricing_summary", q_pricing_summary, _Q_PRICING_SUMMARY)
+register("top_orders", q_top_orders, _Q_TOP_ORDERS)
+register("region_revenue", q_region_revenue, _Q_REGION_REVENUE)
+register("semi_join", q_semi_join, _Q_SEMI_JOIN)
+register("anti_join", q_anti_join, _Q_ANTI_JOIN)
+register("set_ops", q_set_ops, _Q_SET_OPS)
+register("window_topn", q_window_topn, _Q_WINDOW_TOPN)
+register("window_running", q_window_running, _Q_WINDOW_RUNNING)
+register("harmonized_union", q_harmonized_union, _Q_HARMONIZED_UNION)

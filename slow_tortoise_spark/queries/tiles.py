@@ -7,6 +7,7 @@ from slow_tortoise_spark.queries._shared import (
     _DSUM,
     _dsum,
     _t,
+    register,
 )
 
 # Tiling family (G1–G7) on synthesized coordinates
@@ -126,3 +127,6 @@ _Q_GRID_STATS = f"""
 """
 
 
+register("tile_binning", q_tile_binning, _Q_TILE_BINNING)
+register("tile_rollup", q_tile_rollup, _Q_TILE_ROLLUP)
+register("grid_stats", q_grid_stats, _Q_GRID_STATS)

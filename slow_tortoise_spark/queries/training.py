@@ -15,6 +15,7 @@ from slow_tortoise_spark.queries._shared import (
     minhash_lsh_candidates,
     minhash_signature,
     simhash16,
+    register,
 )
 
 # ---------------------------------------------------------------------------
@@ -472,3 +473,17 @@ _Q_IVF_TOPK = """
 
 
 # ---------------------------------------------------------------------------
+
+
+register("doc_fingerprints", q_doc_fingerprints, _Q_DOC_FINGERPRINTS)
+register("token_stats", q_token_stats, _Q_TOKEN_STATS)
+register("lang_id", q_lang_id, _lang_id_sql())
+register("minhash_signatures", q_minhash_signatures, _Q_MINHASH_SIGNATURES)
+register("minhash_lsh_pairs", q_minhash_lsh_pairs, _Q_MINHASH_LSH_PAIRS)
+register("jaccard_pairs", q_jaccard_pairs, _Q_JACCARD_PAIRS)
+register("simhash", q_simhash, _simhash_sql())
+register("ann_cosine_topk", q_ann_cosine_topk, _Q_ANN_COSINE_TOPK)
+register(
+    "embedding_near_dups", q_embedding_near_dups, _embedding_near_dups_sql(),
+)
+register("ivf_topk", q_ivf_topk, _Q_IVF_TOPK)

@@ -1,4 +1,4 @@
-"""Verifier tier: iterative/trained operators (BPE training, span
+"""Query family: iterative/trained operators (BPE training, span
 dedup, winnowing, gramian/PCA, Bloom contamination, k-means, logreg).
 Formerly queries.py lines 3855-4356."""
 from __future__ import annotations
@@ -8,13 +8,10 @@ from slow_tortoise_spark.queries._shared import (
     F,
     _t,
     read_table,
-)
-from slow_tortoise_spark.queries.verifier_core import (
-    VERIFIER_ORACLE_SQL,
-    VERIFIER_QUERIES,
+    register,
 )
 
-# Iterative BPE training (verifier tier — the oracle replays every merge)
+# Iterative BPE training (the oracle replays every merge)
 # ---------------------------------------------------------------------------
 
 
@@ -61,12 +58,11 @@ def _bpe_train_sql(k: int = 8) -> str:
     return f"WITH {', '.join(ctes)} SELECT * FROM ({unions}) ORDER BY rank"
 
 
-VERIFIER_QUERIES["bpe_train"] = q_bpe_train
-VERIFIER_ORACLE_SQL["bpe_train"] = _bpe_train_sql(8)
+register("bpe_train", q_bpe_train, _bpe_train_sql(8))
 
 
 # ---------------------------------------------------------------------------
-# Span-level exact-substring dedup + winnowing fingerprints (verifier tier)
+# Span-level exact-substring dedup + winnowing fingerprints
 # ---------------------------------------------------------------------------
 
 
@@ -192,14 +188,12 @@ _Q_WINNOW_FP = """
 """
 
 
-VERIFIER_QUERIES["dup_span_removal"] = q_dup_span_removal
-VERIFIER_ORACLE_SQL["dup_span_removal"] = _Q_DUP_SPAN_REMOVAL
-VERIFIER_QUERIES["winnow_fp"] = q_winnow_fp
-VERIFIER_ORACLE_SQL["winnow_fp"] = _Q_WINNOW_FP
+register("dup_span_removal", q_dup_span_removal, _Q_DUP_SPAN_REMOVAL)
+register("winnow_fp", q_winnow_fp, _Q_WINNOW_FP)
 
 
 # ---------------------------------------------------------------------------
-# Embedding gramian + Bloom-filter contamination (verifier tier)
+# Embedding gramian + Bloom-filter contamination
 # ---------------------------------------------------------------------------
 
 
@@ -322,10 +316,8 @@ def _bloom_sql(n: int = 5, k: int = 5) -> str:
 """
 
 
-VERIFIER_QUERIES["embedding_gramian"] = q_embedding_gramian
-VERIFIER_ORACLE_SQL["embedding_gramian"] = _Q_EMBEDDING_GRAMIAN
-VERIFIER_QUERIES["bloom_contamination"] = q_bloom_contamination
-VERIFIER_ORACLE_SQL["bloom_contamination"] = _bloom_sql(5, 5)
+register("embedding_gramian", q_embedding_gramian, _Q_EMBEDDING_GRAMIAN)
+register("bloom_contamination", q_bloom_contamination, _bloom_sql(5, 5))
 
 
 def q_shuffle_rows(spark, sf_dir):
@@ -359,12 +351,11 @@ _Q_SHUFFLE_ROWS = """
 """
 
 
-VERIFIER_QUERIES["shuffle_rows"] = q_shuffle_rows
-VERIFIER_ORACLE_SQL["shuffle_rows"] = _Q_SHUFFLE_ROWS
+register("shuffle_rows", q_shuffle_rows, _Q_SHUFFLE_ROWS)
 
 
 # ---------------------------------------------------------------------------
-# K-means Lloyd iterations (verifier tier — the oracle replays every round)
+# K-means Lloyd iterations (the oracle replays every round)
 # ---------------------------------------------------------------------------
 
 
@@ -431,12 +422,11 @@ def _kmeans_sql(n_cells: int = 4, iters: int = 2) -> str:
     )
 
 
-VERIFIER_QUERIES["kmeans_assign"] = q_kmeans_assign
-VERIFIER_ORACLE_SQL["kmeans_assign"] = _kmeans_sql(4, 2)
+register("kmeans_assign", q_kmeans_assign, _kmeans_sql(4, 2))
 
 
 # ---------------------------------------------------------------------------
-# Logistic-regression trainer (verifier tier — oracle replays every GD round)
+# Logistic-regression trainer (oracle replays every GD round)
 # ---------------------------------------------------------------------------
 
 
@@ -512,14 +502,11 @@ def _logreg_sql(dim: int = 8, iters: int = 5, lr: float = 0.5) -> str:
     )
 
 
-VERIFIER_QUERIES["logreg_weights"] = q_logreg_weights
-VERIFIER_ORACLE_SQL["logreg_weights"] = _logreg_sql(8, 5, 0.5)
-
-
+register("logreg_weights", q_logreg_weights, _logreg_sql(8, 5, 0.5))
 
 
 # ---------------------------------------------------------------------------
-# Product quantization (verifier tier — the oracle replays every Lloyd
+# Product quantization (the oracle replays every Lloyd
 # round in every subspace; Jégou et al. 2011 ADC convention)
 # ---------------------------------------------------------------------------
 
@@ -602,8 +589,7 @@ def _pq_codes_sql(m: int = 4, ksub: int = 4, dsub: int = 16,
     )
 
 
-VERIFIER_QUERIES["pq_codes"] = q_pq_codes
-VERIFIER_ORACLE_SQL["pq_codes"] = _pq_codes_sql(4, 4, 16, 1)
+register("pq_codes", q_pq_codes, _pq_codes_sql(4, 4, 16, 1))
 
 
 def q_pq_topk(spark, sf_dir):
@@ -645,12 +631,11 @@ def _pq_topk_sql(m: int = 4, ksub: int = 4, dsub: int = 16,
     )
 
 
-VERIFIER_QUERIES["pq_topk"] = q_pq_topk
-VERIFIER_ORACLE_SQL["pq_topk"] = _pq_topk_sql(4, 4, 16, 1, 0, 10)
+register("pq_topk", q_pq_topk, _pq_topk_sql(4, 4, 16, 1, 0, 10))
 
 
 # ---------------------------------------------------------------------------
-# IVFADC (verifier tier — IVF cosine k-means + residual-PQ Lloyd + probe
+# IVFADC (IVF cosine k-means + residual-PQ Lloyd + probe
 # + per-cell ADC tables, ALL replayed by the oracle)
 # ---------------------------------------------------------------------------
 
@@ -820,12 +805,11 @@ def _ivfpq_sql(k: int = 10, **kw) -> str:
     )
 
 
-VERIFIER_QUERIES["ivfpq_topk"] = q_ivfpq_topk
-VERIFIER_ORACLE_SQL["ivfpq_topk"] = _ivfpq_sql()
+register("ivfpq_topk", q_ivfpq_topk, _ivfpq_sql())
 
 
 # ---------------------------------------------------------------------------
-# PageRank (verifier tier — the oracle replays every power iteration)
+# PageRank (the oracle replays every power iteration)
 # ---------------------------------------------------------------------------
 
 
@@ -931,8 +915,7 @@ def _pagerank_sql(iters: int = 3) -> str:
     )
 
 
-VERIFIER_QUERIES["pagerank_graph"] = q_pagerank_graph
-VERIFIER_ORACLE_SQL["pagerank_graph"] = _pagerank_sql(3)
+register("pagerank_graph", q_pagerank_graph, _pagerank_sql(3))
 
 
 def q_ivfpq_rerank(spark, sf_dir):
@@ -981,12 +964,11 @@ def _ivfpq_rerank_sql(rerank: int = 40, k: int = 10) -> str:
     )
 
 
-VERIFIER_QUERIES["ivfpq_rerank"] = q_ivfpq_rerank
-VERIFIER_ORACLE_SQL["ivfpq_rerank"] = _ivfpq_rerank_sql()
+register("ivfpq_rerank", q_ivfpq_rerank, _ivfpq_rerank_sql())
 
 
 # ---------------------------------------------------------------------------
-# Harmonic centrality (verifier tier — the oracle replays every BFS round)
+# Harmonic centrality (the oracle replays every BFS round)
 # ---------------------------------------------------------------------------
 
 
@@ -1066,12 +1048,11 @@ def _harmonic_sql(radius: int = 3) -> str:
     )
 
 
-VERIFIER_QUERIES["harmonic_centrality"] = q_harmonic_centrality
-VERIFIER_ORACLE_SQL["harmonic_centrality"] = _harmonic_sql(3)
+register("harmonic_centrality", q_harmonic_centrality, _harmonic_sql(3))
 
 
 # ---------------------------------------------------------------------------
-# HyperBall harmonic centrality (verifier tier — the oracle replays the
+# HyperBall harmonic centrality (the oracle replays the
 # exact balls, recomputes every register max, and folds the identical
 # HLL estimate expression)
 # ---------------------------------------------------------------------------
@@ -1188,12 +1169,11 @@ def _hyperball_sql(radius: int = 3) -> str:
     )
 
 
-VERIFIER_QUERIES["hyperball_harmonic"] = q_hyperball_harmonic
-VERIFIER_ORACLE_SQL["hyperball_harmonic"] = _hyperball_sql(3)
+register("hyperball_harmonic", q_hyperball_harmonic, _hyperball_sql(3))
 
 
 # ---------------------------------------------------------------------------
-# k-core decomposition (verifier tier — the oracle unrolls the peeling
+# k-core decomposition (the oracle unrolls the peeling
 # fixpoint, which is unique and order-independent, so generous extra
 # rounds are no-ops)
 # ---------------------------------------------------------------------------
@@ -1249,12 +1229,11 @@ def _k_core_sql(k: int = 10, rounds: int = 16) -> str:
     )
 
 
-VERIFIER_QUERIES["k_core"] = q_k_core
-VERIFIER_ORACLE_SQL["k_core"] = _k_core_sql(10)
+register("k_core", q_k_core, _k_core_sql(10))
 
 
 # ---------------------------------------------------------------------------
-# TrustRank / personalized PageRank (verifier tier — power-iteration
+# TrustRank / personalized PageRank (power-iteration
 # replay with seed-restricted teleport)
 # ---------------------------------------------------------------------------
 
@@ -1328,12 +1307,11 @@ def _trustrank_sql(iters: int = 3) -> str:
     )
 
 
-VERIFIER_QUERIES["trustrank"] = q_trustrank
-VERIFIER_ORACLE_SQL["trustrank"] = _trustrank_sql(3)
+register("trustrank", q_trustrank, _trustrank_sql(3))
 
 
 # ---------------------------------------------------------------------------
-# HyperBall closeness centrality (verifier tier — same register replay
+# HyperBall closeness centrality (same register replay
 # as hyperball_harmonic, closeness fold)
 # ---------------------------------------------------------------------------
 
@@ -1377,12 +1355,13 @@ def _hyperball_closeness_sql(radius: int = 3) -> str:
     )
 
 
-VERIFIER_QUERIES["hyperball_closeness"] = q_hyperball_closeness
-VERIFIER_ORACLE_SQL["hyperball_closeness"] = _hyperball_closeness_sql(3)
+register(
+    "hyperball_closeness", q_hyperball_closeness, _hyperball_closeness_sql(3),
+)
 
 
 # ---------------------------------------------------------------------------
-# Label propagation communities (verifier tier — the oracle replays
+# Label propagation communities (the oracle replays
 # every synchronous round; string labels, zero float content)
 # ---------------------------------------------------------------------------
 
@@ -1434,12 +1413,11 @@ def _label_propagation_sql(iters: int = 4) -> str:
     )
 
 
-VERIFIER_QUERIES["label_propagation"] = q_label_propagation
-VERIFIER_ORACLE_SQL["label_propagation"] = _label_propagation_sql(4)
+register("label_propagation", q_label_propagation, _label_propagation_sql(4))
 
 
 # ---------------------------------------------------------------------------
-# Weighted PageRank (verifier tier — power-iteration replay where each
+# Weighted PageRank (power-iteration replay where each
 # edge carries its distinct-order count as link weight)
 # ---------------------------------------------------------------------------
 
@@ -1529,12 +1507,11 @@ def _pagerank_weighted_sql(iters: int = 3) -> str:
     )
 
 
-VERIFIER_QUERIES["pagerank_weighted"] = q_pagerank_weighted
-VERIFIER_ORACLE_SQL["pagerank_weighted"] = _pagerank_weighted_sql(3)
+register("pagerank_weighted", q_pagerank_weighted, _pagerank_weighted_sql(3))
 
 
 # ---------------------------------------------------------------------------
-# Core number / full degeneracy decomposition (verifier tier — the
+# Core number / full degeneracy decomposition (the
 # oracle replays the engine's bucket-peeling loop step for step,
 # with generous no-op steps past exhaustion)
 # ---------------------------------------------------------------------------
@@ -1615,12 +1592,11 @@ def _core_number_sql(steps: int = 16) -> str:
     )
 
 
-VERIFIER_QUERIES["core_number"] = q_core_number
-VERIFIER_ORACLE_SQL["core_number"] = _core_number_sql(16)
+register("core_number", q_core_number, _core_number_sql(16))
 
 
 # ---------------------------------------------------------------------------
-# Triangle counts / local clustering coefficient (verifier tier — the
+# Triangle counts / local clustering coefficient (the
 # oracle replays the degree-ordered orientation and the path-closure
 # join; counts are exact integers, the one float division mirrors the
 # engine)
@@ -1716,12 +1692,11 @@ SELECT d.src AS node,
 FROM gdeg d LEFT JOIN gcorner c ON c.node = d.src
 ORDER BY node"""
 
-VERIFIER_QUERIES["triangle_counts"] = q_triangle_counts
-VERIFIER_ORACLE_SQL["triangle_counts"] = _Q_TRIANGLE_COUNTS
+register("triangle_counts", q_triangle_counts, _Q_TRIANGLE_COUNTS)
 
 
 # ---------------------------------------------------------------------------
-# Neighborhood function / effective diameter (verifier tier — same
+# Neighborhood function / effective diameter (same
 # exact-ball register replay as the HyperBall centralities, curve fold)
 # ---------------------------------------------------------------------------
 
@@ -1782,12 +1757,13 @@ def _neighborhood_sql(radius: int = 3) -> str:
     )
 
 
-VERIFIER_QUERIES["neighborhood_function"] = q_neighborhood_function
-VERIFIER_ORACLE_SQL["neighborhood_function"] = _neighborhood_sql(3)
+register(
+    "neighborhood_function", q_neighborhood_function, _neighborhood_sql(3),
+)
 
 
 # ---------------------------------------------------------------------------
-# Global transitivity (verifier tier — one aggregation over the
+# Global transitivity (one aggregation over the
 # replayed triangle pyramid)
 # ---------------------------------------------------------------------------
 
@@ -1835,12 +1811,11 @@ FROM (SELECT
   (SELECT CAST(COALESCE(SUM(t), 0) AS BIGINT) FROM gcorner) AS c3,
   (SELECT CAST(COALESCE(SUM(d * (d - 1)), 0) AS BIGINT) FROM gdeg) AS dd)"""
 
-VERIFIER_QUERIES["transitivity"] = q_transitivity
-VERIFIER_ORACLE_SQL["transitivity"] = _Q_TRANSITIVITY
+register("transitivity", q_transitivity, _Q_TRANSITIVITY)
 
 
 # ---------------------------------------------------------------------------
-# Weighted label propagation (verifier tier — round replay with
+# Weighted label propagation (round replay with
 # weight-summed votes)
 # ---------------------------------------------------------------------------
 
@@ -1911,14 +1886,15 @@ def _label_propagation_weighted_sql(iters: int = 4) -> str:
     )
 
 
-VERIFIER_QUERIES["label_propagation_weighted"] = q_label_propagation_weighted
-VERIFIER_ORACLE_SQL["label_propagation_weighted"] = (
-    _label_propagation_weighted_sql(4)
+register(
+    "label_propagation_weighted",
+    q_label_propagation_weighted,
+    _label_propagation_weighted_sql(4),
 )
 
 
 # ---------------------------------------------------------------------------
-# Training-sequence packing (verifier tier — window cumsum replay,
+# Training-sequence packing (window cumsum replay,
 # all-integer output)
 # ---------------------------------------------------------------------------
 
@@ -2088,22 +2064,22 @@ SELECT doc_id, bucket, tokens,
 FROM acum ORDER BY doc_id"""
 
 
-VERIFIER_QUERIES["pack_sequences"] = q_pack_sequences
-VERIFIER_ORACLE_SQL["pack_sequences"] = _pack_sequences_sql(64, 8)
-VERIFIER_QUERIES["pack_sequences_shuffled"] = q_pack_sequences_shuffled
-VERIFIER_ORACLE_SQL["pack_sequences_shuffled"] = _pack_sequences_sql(
-    64, 8, order_by_hash=True
+register("pack_sequences", q_pack_sequences, _pack_sequences_sql(64, 8))
+register(
+    "pack_sequences_shuffled",
+    q_pack_sequences_shuffled,
+    _pack_sequences_sql(64, 8, order_by_hash=True),
 )
-VERIFIER_QUERIES["pack_sequences_append"] = q_pack_sequences_append
-VERIFIER_ORACLE_SQL["pack_sequences_append"] = _pack_sequences_append_sql(
-    64, 8
+register(
+    "pack_sequences_append",
+    q_pack_sequences_append,
+    _pack_sequences_append_sql(64, 8),
 )
-VERIFIER_QUERIES["sequence_index"] = q_sequence_index
-VERIFIER_ORACLE_SQL["sequence_index"] = _sequence_index_sql(64, 8)
+register("sequence_index", q_sequence_index, _sequence_index_sql(64, 8))
 
 
 # ---------------------------------------------------------------------------
-# Budget-capped quality selection (verifier tier — the oracle IS the
+# Budget-capped quality selection (the oracle IS the
 # naive global-window plan the distributed operator replaces)
 # ---------------------------------------------------------------------------
 
@@ -2210,8 +2186,7 @@ WHERE (source = 'src0' AND ce <= 900)
 ORDER BY doc_id"""
 
 
-VERIFIER_QUERIES["token_budget_select"] = q_token_budget_select
-VERIFIER_ORACLE_SQL["token_budget_select"] = _Q_TOKEN_BUDGET_SELECT
+register("token_budget_select", q_token_budget_select, _Q_TOKEN_BUDGET_SELECT)
 def q_token_budget_epochs(spark, sf_dir):
     """Data-constrained epoch plan: a 70k-token budget over a ~27-28k
     token corpus (max 4 epochs) — two full epochs for every doc plus a
@@ -2276,10 +2251,8 @@ SELECT doc_id, score, epoch FROM part
 ORDER BY doc_id, epoch"""
 
 
-VERIFIER_QUERIES["token_budget_mix"] = q_token_budget_mix
-VERIFIER_ORACLE_SQL["token_budget_mix"] = _Q_TOKEN_BUDGET_MIX
-VERIFIER_QUERIES["token_budget_epochs"] = q_token_budget_epochs
-VERIFIER_ORACLE_SQL["token_budget_epochs"] = _Q_TOKEN_BUDGET_EPOCHS
+register("token_budget_mix", q_token_budget_mix, _Q_TOKEN_BUDGET_MIX)
+register("token_budget_epochs", q_token_budget_epochs, _Q_TOKEN_BUDGET_EPOCHS)
 
 
 def q_pack_sequences_epochs(spark, sf_dir):
@@ -2374,9 +2347,10 @@ SELECT doc_id, epoch, bucket, toks AS tokens,
 FROM pc ORDER BY doc_id, epoch"""
 
 
-VERIFIER_QUERIES["pack_sequences_epochs"] = q_pack_sequences_epochs
-VERIFIER_ORACLE_SQL["pack_sequences_epochs"] = (
-    _pack_sequences_epochs_sql(64, 8)
+register(
+    "pack_sequences_epochs",
+    q_pack_sequences_epochs,
+    _pack_sequences_epochs_sql(64, 8),
 )
 
 
@@ -2449,7 +2423,8 @@ SELECT doc_id, bucket, tokens, seq, seq_offset
 FROM chain ORDER BY doc_id"""
 
 
-VERIFIER_QUERIES["pack_sequences_nosplit"] = q_pack_sequences_nosplit
-VERIFIER_ORACLE_SQL["pack_sequences_nosplit"] = (
-    _pack_sequences_nosplit_sql(64, 8)
+register(
+    "pack_sequences_nosplit",
+    q_pack_sequences_nosplit,
+    _pack_sequences_nosplit_sql(64, 8),
 )

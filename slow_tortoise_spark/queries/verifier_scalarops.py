@@ -1,4 +1,4 @@
-"""Verifier tier: SQ similarity, DSIR, BPE encode, z-order, CDC,
+"""Query family: SQ similarity, DSIR, BPE encode, z-order, CDC,
 count-min, Gopher rules, NFC, HTML, bloom join, resampling.  Formerly
 queries.py lines 4386-4987."""
 from __future__ import annotations
@@ -8,10 +8,7 @@ from slow_tortoise_spark.queries._shared import (
     _DSUM,
     _t,
     read_table,
-)
-from slow_tortoise_spark.queries.verifier_core import (
-    VERIFIER_ORACLE_SQL,
-    VERIFIER_QUERIES,
+    register,
 )
 from slow_tortoise_spark.queries.tiles import (
     _TILE_SQL,
@@ -60,8 +57,7 @@ _Q_SQ_TOPK = """
 """
 
 
-VERIFIER_QUERIES["sq_topk"] = q_sq_topk
-VERIFIER_ORACLE_SQL["sq_topk"] = _Q_SQ_TOPK
+register("sq_topk", q_sq_topk, _Q_SQ_TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -132,8 +128,7 @@ _Q_DSIR_WEIGHTS = f"""
 """
 
 
-VERIFIER_QUERIES["dsir_weights"] = q_dsir_weights
-VERIFIER_ORACLE_SQL["dsir_weights"] = _Q_DSIR_WEIGHTS
+register("dsir_weights", q_dsir_weights, _Q_DSIR_WEIGHTS)
 
 
 # ---------------------------------------------------------------------------
@@ -198,8 +193,7 @@ def _bpe_encode_sql(k: int = 8) -> str:
   ORDER BY d.doc_id"""
 
 
-VERIFIER_QUERIES["bpe_encode"] = q_bpe_encode
-VERIFIER_ORACLE_SQL["bpe_encode"] = _bpe_encode_sql(8)
+register("bpe_encode", q_bpe_encode, _bpe_encode_sql(8))
 
 
 # ---------------------------------------------------------------------------
@@ -250,8 +244,7 @@ _Q_ZORDER_STATS = f"""
 """
 
 
-VERIFIER_QUERIES["zorder_stats"] = q_zorder_stats
-VERIFIER_ORACLE_SQL["zorder_stats"] = _Q_ZORDER_STATS
+register("zorder_stats", q_zorder_stats, _Q_ZORDER_STATS)
 
 
 # ---------------------------------------------------------------------------
@@ -285,8 +278,7 @@ _Q_LATEST_ORDERS = """
 """
 
 
-VERIFIER_QUERIES["latest_orders"] = q_latest_orders
-VERIFIER_ORACLE_SQL["latest_orders"] = _Q_LATEST_ORDERS
+register("latest_orders", q_latest_orders, _Q_LATEST_ORDERS)
 
 
 # ---------------------------------------------------------------------------
@@ -352,8 +344,7 @@ def _cms_sql(width: int = 64, depth: int = 4) -> str:
 """
 
 
-VERIFIER_QUERIES["cms_token_counts"] = q_cms_token_counts
-VERIFIER_ORACLE_SQL["cms_token_counts"] = _cms_sql(64, 4)
+register("cms_token_counts", q_cms_token_counts, _cms_sql(64, 4))
 
 
 # ---------------------------------------------------------------------------
@@ -426,8 +417,7 @@ _Q_GOPHER_RULES = f"""
 """
 
 
-VERIFIER_QUERIES["gopher_rules"] = q_gopher_rules
-VERIFIER_ORACLE_SQL["gopher_rules"] = _Q_GOPHER_RULES
+register("gopher_rules", q_gopher_rules, _Q_GOPHER_RULES)
 
 
 # ---------------------------------------------------------------------------
@@ -461,8 +451,7 @@ _Q_NFC_NORMALIZE = """
 """
 
 
-VERIFIER_QUERIES["nfc_normalize"] = q_nfc_normalize
-VERIFIER_ORACLE_SQL["nfc_normalize"] = _Q_NFC_NORMALIZE
+register("nfc_normalize", q_nfc_normalize, _Q_NFC_NORMALIZE)
 
 
 # ---------------------------------------------------------------------------
@@ -524,8 +513,7 @@ _Q_STRIP_HTML = """
 """
 
 
-VERIFIER_QUERIES["strip_html"] = q_strip_html
-VERIFIER_ORACLE_SQL["strip_html"] = _Q_STRIP_HTML
+register("strip_html", q_strip_html, _Q_STRIP_HTML)
 
 
 # ---------------------------------------------------------------------------
@@ -562,8 +550,7 @@ _Q_BLOOM_JOIN = """
 """
 
 
-VERIFIER_QUERIES["bloom_join"] = q_bloom_join
-VERIFIER_ORACLE_SQL["bloom_join"] = _Q_BLOOM_JOIN
+register("bloom_join", q_bloom_join, _Q_BLOOM_JOIN)
 
 
 # ---------------------------------------------------------------------------
@@ -619,7 +606,4 @@ _Q_RESAMPLE_FFILL = """
 """
 
 
-VERIFIER_QUERIES["resample_ffill"] = q_resample_ffill
-VERIFIER_ORACLE_SQL["resample_ffill"] = _Q_RESAMPLE_FFILL
-
-
+register("resample_ffill", q_resample_ffill, _Q_RESAMPLE_FFILL)

@@ -1,4 +1,4 @@
-"""Verifier tier: MAD outliers, PSI drift, weighted sampling,
+"""Query family: MAD outliers, PSI drift, weighted sampling,
 negative pairs, grouping sets, salted join.  Formerly queries.py lines
 5019-5355."""
 from __future__ import annotations
@@ -7,10 +7,7 @@ from slow_tortoise_spark.queries._shared import (
     F,
     _DSUM,
     _t,
-)
-from slow_tortoise_spark.queries.verifier_core import (
-    VERIFIER_ORACLE_SQL,
-    VERIFIER_QUERIES,
+    register,
 )
 from slow_tortoise_spark.queries.verifier_scalarops import (
     _dsir_nib_sql,
@@ -65,8 +62,7 @@ _Q_MAD_OUTLIERS = """
 """
 
 
-VERIFIER_QUERIES["mad_outliers"] = q_mad_outliers
-VERIFIER_ORACLE_SQL["mad_outliers"] = _Q_MAD_OUTLIERS
+register("mad_outliers", q_mad_outliers, _Q_MAD_OUTLIERS)
 
 
 # ---------------------------------------------------------------------------
@@ -122,8 +118,7 @@ _Q_PSI_DRIFT = f"""
 """
 
 
-VERIFIER_QUERIES["psi_drift"] = q_psi_drift
-VERIFIER_ORACLE_SQL["psi_drift"] = _Q_PSI_DRIFT
+register("psi_drift", q_psi_drift, _Q_PSI_DRIFT)
 
 
 # ---------------------------------------------------------------------------
@@ -156,8 +151,7 @@ _Q_WEIGHTED_SAMPLE = f"""
 """
 
 
-VERIFIER_QUERIES["weighted_sample"] = q_weighted_sample
-VERIFIER_ORACLE_SQL["weighted_sample"] = _Q_WEIGHTED_SAMPLE
+register("weighted_sample", q_weighted_sample, _Q_WEIGHTED_SAMPLE)
 
 
 def q_resample_linear(spark, sf_dir):
@@ -223,8 +217,7 @@ _Q_RESAMPLE_LINEAR = """
 """
 
 
-VERIFIER_QUERIES["resample_linear"] = q_resample_linear
-VERIFIER_ORACLE_SQL["resample_linear"] = _Q_RESAMPLE_LINEAR
+register("resample_linear", q_resample_linear, _Q_RESAMPLE_LINEAR)
 
 
 # ---------------------------------------------------------------------------
@@ -269,8 +262,7 @@ _Q_NEGATIVE_PAIRS = """
 """
 
 
-VERIFIER_QUERIES["negative_pairs"] = q_negative_pairs
-VERIFIER_ORACLE_SQL["negative_pairs"] = _Q_NEGATIVE_PAIRS
+register("negative_pairs", q_negative_pairs, _Q_NEGATIVE_PAIRS)
 
 
 # ---------------------------------------------------------------------------
@@ -313,8 +305,7 @@ _Q_GROUPING_SETS = f"""
 """
 
 
-VERIFIER_QUERIES["grouping_sets"] = q_grouping_sets
-VERIFIER_ORACLE_SQL["grouping_sets"] = _Q_GROUPING_SETS
+register("grouping_sets", q_grouping_sets, _Q_GROUPING_SETS)
 
 
 # ---------------------------------------------------------------------------
@@ -348,8 +339,7 @@ _Q_SALTED_JOIN = """
 """
 
 
-VERIFIER_QUERIES["salted_join"] = q_salted_join
-VERIFIER_ORACLE_SQL["salted_join"] = _Q_SALTED_JOIN
+register("salted_join", q_salted_join, _Q_SALTED_JOIN)
 
 
 # ---------------------------------------------------------------------------
@@ -421,8 +411,7 @@ _Q_PPL_BUCKETS = """
 """
 
 
-VERIFIER_QUERIES["ppl_buckets"] = q_ppl_buckets
-VERIFIER_ORACLE_SQL["ppl_buckets"] = _Q_PPL_BUCKETS
+register("ppl_buckets", q_ppl_buckets, _Q_PPL_BUCKETS)
 
 
 # ---------------------------------------------------------------------------
@@ -530,8 +519,7 @@ _Q_KN_LOGPROB = """
 """
 
 
-VERIFIER_QUERIES["kn_logprob"] = q_kn_logprob
-VERIFIER_ORACLE_SQL["kn_logprob"] = _Q_KN_LOGPROB
+register("kn_logprob", q_kn_logprob, _Q_KN_LOGPROB)
 
 
 # ---------------------------------------------------------------------------
@@ -613,7 +601,5 @@ def q_csv_roundtrip(spark, sf_dir):
     return out
 
 
-VERIFIER_QUERIES["jsonl_roundtrip"] = q_jsonl_roundtrip
-VERIFIER_ORACLE_SQL["jsonl_roundtrip"] = _Q_DOCS_IDENTITY
-VERIFIER_QUERIES["csv_roundtrip"] = q_csv_roundtrip
-VERIFIER_ORACLE_SQL["csv_roundtrip"] = _Q_DOCS_IDENTITY
+register("jsonl_roundtrip", q_jsonl_roundtrip, _Q_DOCS_IDENTITY)
+register("csv_roundtrip", q_csv_roundtrip, _Q_DOCS_IDENTITY)

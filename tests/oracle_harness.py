@@ -1,9 +1,10 @@
 """Standalone oracle harness — mimics the driver's correctness gate.
 
-Runs every ``queries()`` entry from ``__spark_entry__`` against its
-``oracle_sql()`` in DuckDB at sf0.01 (override with argv[1] / env
-SPARK_GRAFT_SF_DIR) and compares row count, column names, and values
-(order-insensitive, exact equality after canonicalization).
+Runs every registered query (the driver catalog of ``__spark_entry__``
+plus the verifier tier) against its oracle SQL in DuckDB at sf0.01
+(override with argv[1] / env SPARK_GRAFT_SF_DIR) and compares row
+count, column names, and values (order-insensitive, exact equality
+after canonicalization).
 
 Usage:  python tests/oracle_harness.py [sf_dir] [query ...]
 """
@@ -38,7 +39,8 @@ def canon(rows, columns):
 def main() -> int:
     import duckdb
 
-    import __spark_entry__ as entrymod
+    import __spark_entry__  # noqa: F401  (pins the process timezone)
+    from slow_tortoise_spark.queries import REGISTRY
     from slow_tortoise_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and os.path.isdir(sys.argv[1]) else \
@@ -53,16 +55,9 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    # Local-only verifier tier (driver caps at 50 catalog queries).
-    from slow_tortoise_spark.queries import VERIFIER_ORACLE_SQL, VERIFIER_QUERIES
-
-    queries = {**queries, **VERIFIER_QUERIES}
-    oracles = {**oracles, **VERIFIER_ORACLE_SQL}
     failures = []
     n_run = 0
-    for name, fn in queries.items():
+    for name, (fn, sql) in REGISTRY.items():
         if only and name not in only:
             continue
         n_run += 1
@@ -75,14 +70,10 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {e}")
             failures.append(name)
             continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(srows)} rows, "
-                  f"{time.time()-t0:.1f}s)")
-            continue
         try:
             # relation API (not DBAPI cursor): .types exposes the real
             # DuckDB types — cursor.description only says 'NUMBER'.
-            rel = con.sql(oracles[name])
+            rel = con.sql(sql)
             ocols = list(rel.columns)
             otypes = [str(t) for t in rel.types]
             orows = rel.fetchall()

@@ -7,15 +7,39 @@ from __future__ import annotations
 
 
 def test_driver_catalog_is_complete_and_capped():
+    import pytest
+
     import __spark_entry__ as e
     from slow_tortoise_spark.queries import (
+        DRIVER_CATALOG,
+        REGISTRY,
         VERIFIER_ORACLE_SQL,
         VERIFIER_QUERIES,
+        register,
     )
 
     q = e.queries()
     o = e.oracle_sql()
     assert len(q) == 50  # the driver's hard cap — exactly filled
+    # the tier table names only registered queries (a misspelt entry
+    # fails here) and holds no name twice
+    assert len(set(DRIVER_CATALOG)) == len(DRIVER_CATALOG) == 50
+    assert set(DRIVER_CATALOG) <= set(REGISTRY), (
+        set(DRIVER_CATALOG) - set(REGISTRY)
+    )
+    # the registry is exactly the two tiers, 150 queries in all
+    assert len(REGISTRY) == 150
+    assert set(REGISTRY) == set(q) | set(VERIFIER_QUERIES)
+    assert all(REGISTRY[n] == (q[n], o[n]) for n in q)
+    assert all(
+        REGISTRY[n] == (VERIFIER_QUERIES[n], VERIFIER_ORACLE_SQL[n])
+        for n in VERIFIER_QUERIES
+    )
+    # a name registers once: a second registration raises, registry intact
+    name, (fn, sql) = next(iter(REGISTRY.items()))
+    with pytest.raises(ValueError, match="already registered"):
+        register(name, fn, sql)
+    assert REGISTRY[name] == (fn, sql) and len(REGISTRY) == 150
     assert set(q) == set(o), (
         set(q) ^ set(o)
     )  # every driver query is hash-checked

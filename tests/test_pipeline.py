@@ -356,17 +356,50 @@ def test_selected_output_tasks(spark, cube_path, tmp_path):
         ))
 
 
-def test_pipeline_on_reference_e2e_fixture(spark, tmp_path):
-    """Run the full pipeline on the REFERENCE's own e2e fixture
-    (/root/reference/tests/data/geo-test-data.parquet — the input of
-    tests/test_data_pipeline.py::test_model) and assert the same artifact
-    the reference smoke asserts exists (the Ethiopia country timeseries),
-    plus cross-check its monthly values against DuckDB on the raw file."""
+def _write_f1_fixture(path):
+    """FIXTURES.md F1 (`datacube_raw`): 40 rows, 2 features x 2 countries
+    x 5 monthly timestamps (2019-10..2020-02) x 2 points, values 1..40 —
+    the shape of the reference's tests/data/geo-test-data.parquet."""
+    import pandas as pd
+
+    months = [(2019, 10), (2019, 11), (2019, 12), (2020, 1), (2020, 2)]
+    rows = []
+    for i in range(40):
+        j = i % 20
+        eth = j < 10
+        point = (j % 10) // 5
+        y, m = months[j % 5]
+        rows.append({
+            "timestamp": _ms(y, m, 1),
+            "country": "Ethiopia" if eth else "Kenya",
+            "admin1": "Afar" if eth else "Nairobi",
+            "admin2": f"zone{point}" if eth else None,
+            "admin3": None,
+            "lat": (10.17 if eth else -1.29) + point * 0.01,
+            "lng": (40.65 if eth else 36.82) + point * 0.01,
+            "feature": "feature1" if i < 20 else "feature2",
+            "value": float(i + 1),
+        })
+    pd.DataFrame(rows).astype({"admin3": "string"}).to_parquet(path)
+
+
+@pytest.mark.parametrize("fixture", ["reference", "f1"])
+def test_pipeline_on_reference_e2e_fixture(spark, tmp_path, fixture):
+    """Run the full pipeline on an F1-shaped datacube (FIXTURES.md) and
+    assert the same artifact the reference smoke asserts exists (the
+    Ethiopia country timeseries), plus cross-check its monthly values
+    against DuckDB on the raw file.  Two inputs: the REFERENCE's own e2e
+    fixture (the input of its tests/test_data_pipeline.py::test_model)
+    and an F1 parquet written here, which keeps the check running where
+    the reference checkout is absent."""
     import csv as _csv
 
     import duckdb
 
     src = "/root/reference/tests/data/geo-test-data.parquet"
+    if fixture == "f1":
+        src = str(tmp_path / "geo-test-data.parquet")
+        _write_f1_fixture(src)
     out = str(tmp_path / "ref_fixture")
     params = PipelineParams(
         data_id="geo-test-data", run_id="test-run", data_paths=[src],

@@ -493,11 +493,9 @@ def test_headline_query_exchange_budgets(spark, sf_dir):
         # +2 for the in-query weight build (groupBy + its exchange)
         "label_propagation_weighted": 3,
     }
-    merged = dict(Q.QUERIES)
-    merged.update(Q.VERIFIER_QUERIES)
     over = {}
     for name, budget in budgets.items():
-        plan = _plan(merged[name](spark, sf_dir))
+        plan = _plan(Q.REGISTRY[name][0](spark, sf_dir))
         n = plan.count("Exchange")
         if n > budget:
             over[name] = (n, budget)

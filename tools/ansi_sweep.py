@@ -35,7 +35,7 @@ def main() -> int:
         release_local_checkpoints,
         release_operator_caches,
     )
-    from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
+    from slow_tortoise_spark.queries import REGISTRY
     from slow_tortoise_spark.session import get_spark
 
     spark = get_spark(app_name="ansi_sweep", master="local[8]",
@@ -43,8 +43,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     failed: dict[str, str] = {}
-    cat = {**VERIFIER_QUERIES, **QUERIES}
-    for name, fn in sorted(cat.items()):
+    for name, (fn, _) in sorted(REGISTRY.items()):
         try:
             n = fn(spark, sf_dir).count()
             print(f"ok   {name}: {n} rows", file=sys.stderr)
@@ -55,7 +54,7 @@ def main() -> int:
         finally:
             release_operator_caches()
             release_local_checkpoints()
-    print(json.dumps({"queries": len(cat), "failed": failed}))
+    print(json.dumps({"queries": len(REGISTRY), "failed": failed}))
     return 1 if failed else 0
 
 

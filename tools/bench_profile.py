@@ -46,12 +46,11 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = _make_session(sf_dir)
     sc = spark.sparkContext
-    from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
+    from slow_tortoise_spark.queries import REGISTRY
 
-    catalog = {**VERIFIER_QUERIES, **QUERIES}
     rows = []
     for name in names:
-        fn = catalog[name]
+        fn = REGISTRY[name][0]
         sc.setJobDescription(f"profile:{name}")
         # cold pass: build + first write (codegen compile, cache warm)
         t0 = time.time()

@@ -89,15 +89,13 @@ def main() -> int:
         release_local_checkpoints,
         release_operator_caches,
     )
-    from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
+    from slow_tortoise_spark.queries import REGISTRY
     from slow_tortoise_spark.session import get_spark
 
     spark = get_spark(app_name="config_sweep", master="local[8]",
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    cat = {**VERIFIER_QUERIES, **QUERIES}
-    if only:
-        cat = {k: v for k, v in cat.items() if k in only}
+    cat = {k: fn for k, (fn, _) in REGISTRY.items() if not only or k in only}
 
     hashes: dict[str, dict[str, str]] = {}
     failed: dict[str, str] = {}

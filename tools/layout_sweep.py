@@ -42,7 +42,7 @@ def main() -> int:
         release_local_checkpoints,
         release_operator_caches,
     )
-    from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
+    from slow_tortoise_spark.queries import REGISTRY
     from slow_tortoise_spark.session import get_spark
     from slow_tortoise_spark.sources.reader import read_table
     from tools.config_sweep import _canon_hash
@@ -64,8 +64,7 @@ def main() -> int:
                 os.path.join(staged, f"{t}.parquet")
             )
 
-        cat = {**VERIFIER_QUERIES, **QUERIES}
-        for name, fn in sorted(cat.items()):
+        for name, (fn, _) in sorted(REGISTRY.items()):
             try:
                 base = _canon_hash(fn(spark, sf_dir))
                 release_operator_caches()
@@ -87,7 +86,7 @@ def main() -> int:
         shutil.rmtree(staged, ignore_errors=True)
 
     print(json.dumps({
-        "queries": len(cat),
+        "queries": len(REGISTRY),
         "k_files": k,
         "failed": failed,
         "mismatched": mismatched,

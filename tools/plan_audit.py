@@ -42,15 +42,14 @@ def main() -> int:
         release_local_checkpoints,
         release_operator_caches,
     )
-    from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
+    from slow_tortoise_spark.queries import REGISTRY
     from slow_tortoise_spark.session import get_spark
 
     spark = get_spark(app_name="plan_audit", master="local[8]",
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     flagged: dict[str, list[str]] = {}
-    cat = {**VERIFIER_QUERIES, **QUERIES}
-    for name, fn in sorted(cat.items()):
+    for name, (fn, _) in sorted(REGISTRY.items()):
         try:
             plan = (
                 fn(spark, sf_dir)
@@ -75,7 +74,7 @@ def main() -> int:
                         "applyInPandas)")
         if hits:
             flagged[name] = hits
-    print(json.dumps({"queries": len(cat), "flagged": flagged}))
+    print(json.dumps({"queries": len(REGISTRY), "flagged": flagged}))
     return 1 if flagged else 0
 
 

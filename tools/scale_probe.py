@@ -49,19 +49,18 @@ def main() -> int:
         release_local_checkpoints,
         release_operator_caches,
     )
-    from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
+    from slow_tortoise_spark.queries import REGISTRY
     from slow_tortoise_spark.session import get_spark
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(app_name="scale_probe", master=f"local[{cpus}]",
                       shuffle_partitions=int(cpus))
     spark.range(1000).selectExpr("sum(id)").collect()
-    cat = {**VERIFIER_QUERIES, **QUERIES}
     if sweep_all:
-        names = sorted(cat)
+        names = sorted(REGISTRY)
     out = {}
     for name in names:
-        fn = cat[name]
+        fn = REGISTRY[name][0]
         best = None
         for _ in range(reps):
             t0 = time.time()
